@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from prueba_tecnica_analista_etl_spark.functions.text import (
     STOPWORDS,
@@ -755,15 +756,16 @@ def q_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("dcg_e6"),
     )
     # The per-label corpus count is a vocabulary-sized census —
-    # staged per corpus (r15) and shipped as a map LITERAL, so the
-    # former third embeddings scan + broadcast join became a pure
-    # projection. NULL-label census rows are skipped (the former
-    # inner join could never match them), and a NULL true_label
-    # probe drops via the isNotNull filter exactly as the inner
-    # join dropped it.
+    # staged per corpus and shipped as a map LITERAL, so no third
+    # embeddings scan or join is needed. Above the literal slot cap
+    # the census rides a broadcast join instead. NULL-label census
+    # rows are skipped (a join could never match them), and a NULL
+    # true_label probe drops via the isNotNull filter exactly as the
+    # inner join drops it.
     from prueba_tecnica_analista_etl_spark.artifacts import (
         census_artifact,
     )
+    from prueba_tecnica_analista_etl_spark.operators import rank
 
     lc = census_artifact(
         spark,
@@ -777,20 +779,33 @@ def q_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
             if r["label"] is not None
         ),
     )
-    n_of_label = F.element_at(
-        F.create_map(
-            *[
-                c
-                for label, n in lc
-                for c in (F.lit(label), F.lit(n).cast("long"))
-            ]
-        ),
-        F.col("true_label"),
-    )
+    if len(lc) <= rank._MAX_LITERAL_SLOTS:
+        per = per.withColumn(
+            "n",
+            F.element_at(
+                F.create_map(
+                    *[
+                        c
+                        for label, n in lc
+                        for c in (F.lit(label), F.lit(n).cast("long"))
+                    ]
+                ),
+                F.col("true_label"),
+            ),
+        )
+    else:
+        census = spark.createDataFrame(
+            lc,
+            T.StructType(
+                [
+                    T.StructField("true_label", e.schema["label"].dataType),
+                    T.StructField("n", T.LongType()),
+                ]
+            ),
+        )
+        per = per.join(F.broadcast(census), "true_label")
     pw_arr = F.array(*[F.lit(pw) for pw in NDCG_PW])
-    full = per.withColumn("n", n_of_label).filter(
-        F.col("n").isNotNull()
-    ).select(
+    full = per.filter(F.col("n").isNotNull()).select(
         "q_id",
         "true_label",
         "n_rel_at_k",

@@ -7,6 +7,7 @@ merge == recompute under arbitrary splits, funnel monotonicity).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from prueba_tecnica_analista_etl_spark.plans.extensions_distributed import (
@@ -576,7 +577,7 @@ def test_artifact_store_survives_process_boundary(
 ):
     """Disk layer (r10 verdict task 1): artifacts are one-time-per-
     CORPUS, not per-process — a lookup whose memory memo is gone (the
-    fresh-process case, simulated by clearing the in-memory caches)
+    fresh-process case, simulated by a session-scoped clear_artifacts)
     must be served from the persisted parquet/pickle WITHOUT calling
     build(). clear_artifacts(name=...) voids the disk copy too (a
     name-scoped clear means the artifact's definition changed, which
@@ -606,9 +607,8 @@ def test_artifact_store_survives_process_boundary(
     assert df1.count() == 1 and v1 == {"words": [3, 5, 7]}
     assert builds == ["f", "c"]
 
-    # simulate a fresh process: memory memos gone, disk intact
-    artifacts._CACHE.clear()
-    artifacts._VALUE_CACHE.clear()
+    # simulate a fresh process: this session's memo gone, disk intact
+    artifacts.clear_artifacts(spark)
     df2 = artifacts.corpus_artifact(spark, corpus, "pb_frame", build_frame)
     v2 = artifacts.census_artifact(spark, corpus, "pb_val", build_census)
     assert builds == ["f", "c"], "fresh process must be served from disk"
@@ -630,7 +630,7 @@ def test_artifact_store_survives_process_boundary(
         return spark.createDataFrame([], "k int, t timestamp")
 
     e1 = artifacts.corpus_artifact(spark, corpus, "pb_empty", build_empty)
-    artifacts._CACHE.clear()
+    artifacts.clear_artifacts(spark)
     e2 = artifacts.corpus_artifact(spark, corpus, "pb_empty", build_empty)
     assert builds[-1] == "e" and builds.count("e") == 1
     assert e2.count() == 0 and e2.schema == e1.schema
@@ -673,6 +673,213 @@ def test_artifact_directory_reuses_and_evicts_generations(
     assert p2 != p1 and len(builds) == 2
     assert not os.path.exists(p1), "superseded generation must be removed"
     assert os.path.isfile(os.path.join(p2, "payload"))
+
+
+@pytest.mark.parametrize("store", ["on", "off"])
+def test_artifact_lookups_build_once_under_contention(
+    spark, tmp_path, monkeypatch, store
+):
+    """8 threads released together by a barrier look up the same
+    frame, census and directory key: each shape's build() runs exactly
+    once and every caller gets an equal result, with the disk store on
+    and with it disabled (PTAE_ARTIFACT_DIR=""), where no disk copy
+    can cover a caller that misses the memo."""
+    import os
+    import sys
+    import threading
+    import time
+
+    from prueba_tecnica_analista_etl_spark import artifacts
+
+    if store == "off":
+        monkeypatch.setenv("PTAE_ARTIFACT_DIR", "")
+    corpus = str(tmp_path / "corpus")
+    os.makedirs(corpus)
+    with open(os.path.join(corpus, "t.parquet"), "w") as fh:
+        fh.write("generation-one")
+
+    calls = {"frame": 0, "census": 0, "dir": 0}
+    calls_lock = threading.Lock()
+
+    def counted(shape):
+        with calls_lock:
+            calls[shape] += 1
+        time.sleep(0.2)  # widen the window a second builder would hit
+
+    def build_frame():
+        counted("frame")
+        return spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
+
+    def build_census():
+        counted("census")
+        return {"words": [3, 5, 7]}
+
+    def build_dir(d):
+        counted("dir")
+        with open(os.path.join(d, "payload"), "w") as fh:
+            fh.write("x")
+
+    lookups = {
+        "frame": lambda: sorted(
+            tuple(r)
+            for r in artifacts.corpus_artifact(
+                spark, corpus, "race_frame", build_frame
+            ).collect()
+        ),
+        "census": lambda: artifacts.census_artifact(
+            spark, corpus, "race_census", build_census
+        ),
+        "dir": lambda: artifacts.artifact_directory(
+            corpus, "race_dir", build_dir
+        ),
+    }
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads finely
+    try:
+        for shape, lookup in lookups.items():
+            barrier = threading.Barrier(8, timeout=60)
+            results, errors = [], []
+
+            def worker():
+                try:
+                    barrier.wait()
+                    results.append(lookup())
+                except Exception as e:  # noqa: BLE001
+                    errors.append(e)
+
+            threads = [threading.Thread(target=worker) for _ in range(8)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+            assert not any(t.is_alive() for t in threads), shape
+            assert not errors, errors
+            assert calls[shape] == 1, (shape, calls)
+            assert len(results) == 8
+            assert all(r == results[0] for r in results)
+    finally:
+        sys.setswitchinterval(switch)
+    assert os.path.isfile(os.path.join(results[0], "payload"))
+
+
+def test_artifact_memo_published_before_build_lock_is_dropped(
+    spark, tmp_path, monkeypatch
+):
+    """With no disk copy to fall back on (store disabled), a caller
+    arriving between a builder dropping the key's build lock and
+    publishing its memo entry would take a fresh lock, miss the memo
+    and build again. 8 threads sweeping the same 300 census keys with
+    a tiny switch interval hit that gap dozens of times per run when
+    the lock is dropped first; every key must build exactly once."""
+    import os
+    import sys
+    import threading
+
+    from prueba_tecnica_analista_etl_spark import artifacts
+
+    monkeypatch.setenv("PTAE_ARTIFACT_DIR", "")
+    corpus = str(tmp_path / "corpus")
+    os.makedirs(corpus)
+    calls: dict[int, int] = {}
+    calls_lock = threading.Lock()
+
+    def build(i):
+        def b():
+            with calls_lock:
+                calls[i] = calls.get(i, 0) + 1
+            return i
+
+        return b
+
+    barrier = threading.Barrier(8, timeout=60)
+    errors = []
+
+    def worker():
+        try:
+            barrier.wait()
+            for i in range(300):
+                assert artifacts.census_artifact(
+                    spark, corpus, f"gap{i}", build(i)
+                ) == i
+        except Exception as e:  # noqa: BLE001
+            errors.append(e)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    rebuilt = {i: n for i, n in calls.items() if n > 1}
+    assert len(calls) == 300 and not rebuilt, rebuilt
+
+
+def test_disabled_store_gives_same_hashes_and_persists_nothing(
+    spark, sf_dir, monkeypatch
+):
+    """Store-independence: q_bm25, q_eval_auc and q_ann_ivf (frame,
+    census and directory artifacts between them) give the same
+    canonical value multiset with PTAE_ARTIFACT_DIR="" as with the
+    store on, and the store-off run writes nothing under any
+    persistent root -- its builds land in the process-private root."""
+    import os
+
+    from prueba_tecnica_analista_etl_spark import artifacts
+    from prueba_tecnica_analista_etl_spark.plans import REGISTRY
+    from tests.oracle_harness import _canon_rows, compare, duckdb_con
+
+    names = ("q_bm25", "q_eval_auc", "q_ann_ivf")
+
+    def hashes():
+        out = {}
+        for n in names:
+            df = REGISTRY[n].fn(spark, sf_dir)
+            out[n] = _canon_rows(df.columns, [tuple(r) for r in df.collect()])
+        return out
+
+    def listing(root):
+        return sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs
+        )
+
+    con = duckdb_con(sf_dir)
+    for n in names:
+        spec = REGISTRY[n]
+        if spec.oracle is not None:
+            assert compare(spec.fn(spark, sf_dir), con, spec.oracle)["ok"], n
+    con.close()
+    on = hashes()
+    assert all(on.values())
+
+    persistent = [
+        r
+        for r in (
+            os.environ.get("PTAE_ARTIFACT_DIR"),
+            os.path.join(
+                os.path.expanduser("~"),
+                ".cache",
+                "prueba_tecnica_analista_etl_spark",
+            ),
+        )
+        if r
+    ]
+    before = {r: listing(r) for r in persistent}
+    monkeypatch.setenv("PTAE_ARTIFACT_DIR", "")
+    # an empty memo: every artifact is rebuilt with the store off
+    monkeypatch.setattr(artifacts, "_MEMO", {})
+    off = hashes()
+    assert off == on
+    assert {r: listing(r) for r in persistent} == before
+    private = artifacts._PRIVATE_ROOT
+    assert private and os.path.isdir(
+        os.path.join(private, artifacts._corpus_tag(sf_dir))
+    )
 
 
 def test_corpus_fingerprint_memo_collapses_walks(tmp_path, monkeypatch):

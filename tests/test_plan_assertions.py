@@ -16,6 +16,8 @@ they intentionally assert on stable plan-node NAMES, not exact trees.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -465,32 +467,21 @@ def test_r8_late_additions_plan_shapes(spark, sf_dir):
 
 # Output dtypes with at least one green driver value-hash on record
 # (CORRECTNESS_r01–r07). decimal is deliberately NOT here: the only
-# decimal-emitting window query (q_perplexity_buckets) was the only
-# red hash two rounds running, so decimal stringification was never
-# proven — its reported columns now cast to double, and this lint
-# keeps any future window entry from re-introducing an unproven hash
-# dtype unnoticed.
+# decimal-emitting query (q_perplexity_buckets) was the only red hash
+# two rounds running, so decimal stringification was never proven —
+# its reported columns now cast to double, and this lint keeps any
+# query from re-introducing an unproven hash dtype unnoticed.
 _DRIVER_PROVEN_DTYPES = {"bigint", "date", "double", "int", "string"}
 
 
 def test_recorded_window_emits_only_driver_proven_dtypes(
     spark, sf_dir
 ):
-    """Every ORACLE-BACKED query inside the recorded window (the
-    first WINDOW registry entries — the rows the external harness
-    value-hashes) must emit only column dtypes some driver record has
-    already proven green. Rows-only entries are exempt (the driver
-    never hashes their values). _ROTATION_NEW queries are included too:
-    they lead the NEXT window, so an unproven dtype there would be
-    next round's q_inverted_index-class surprise."""
-    from prueba_tecnica_analista_etl_spark import plans
-
-    names = list(REGISTRY)[: plans.WINDOW] + [
-        n for n in plans._ROTATION_NEW if n in REGISTRY
-    ]
+    """Every ORACLE-BACKED query must emit only column dtypes whose
+    value-hash a recorded correctness run has already proven green.
+    Rows-only entries are exempt (their values are never hashed)."""
     offenders = {}
-    for n in names:
-        spec = REGISTRY[n]
+    for n, spec in REGISTRY.items():
         if spec.oracle is None:
             continue
         df = spec.fn(spark, sf_dir)
@@ -501,6 +492,27 @@ def test_recorded_window_emits_only_driver_proven_dtypes(
         if novel:
             offenders[n] = sorted(novel)
     assert not offenders, offenders
+
+
+def test_eval_ndcg_label_census_falls_back_to_broadcast_join(
+    spark, sf_dir, monkeypatch
+):
+    """q_eval_ndcg ships its per-label corpus census as a map literal
+    only up to rank._MAX_LITERAL_SLOTS entries; above the cap the
+    census rides a broadcast hash join on true_label instead, with
+    the same rows."""
+    from prueba_tecnica_analista_etl_spark.operators import rank
+
+    literal = REGISTRY["q_eval_ndcg"].fn(spark, sf_dir)
+    assert "BroadcastHashJoin" not in _plan(spark, sf_dir, "q_eval_ndcg")
+    monkeypatch.setattr(rank, "_MAX_LITERAL_SLOTS", 1)
+    joined = REGISTRY["q_eval_ndcg"].fn(spark, sf_dir)
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"BroadcastHashJoin \[true_label#\d+\]", plan), plan
+    rows = literal.collect()
+    assert len(rows) > 1
+    assert joined.columns == literal.columns
+    assert sorted(map(tuple, joined.collect())) == sorted(map(tuple, rows))
 
 
 def test_dynamic_partition_pruning_prunes_fact_scan(

@@ -1,12 +1,14 @@
 #!/usr/bin/env python
-"""Isolated-warm A/B timing for registry queries (r15 opt round).
+"""Isolated-warm A/B timing for registry queries.
 
-Runs the named queries in one session: one warm-up execution each,
-then N alternating timed executions via the noop sink, reporting
-per-query min/median. Same-session alternation is the only defensible
-comparison on this VM class (verify skill: degraded-VM weather).
+Runs the named queries (default: all) in one session: one warm-up
+execution each, then N alternating timed executions via the noop
+sink, reporting per-query min/median. Same-session alternation keeps
+host-speed drift from landing on one arm only.
 
-Usage: python tools_r15_ab.py q_a q_b ... [--trials=5] [--sf=/root/testdata/sf0.1]
+Usage: python tools_ab.py q_a q_b ... [--trials=5] [--sf=SF_DIR]
+
+SF_DIR defaults to the sf0.1 corpus next to the smoke corpus.
 """
 from __future__ import annotations
 
@@ -22,15 +24,17 @@ args = [a for a in sys.argv[1:] if not a.startswith("--")]
 trials = next(
     (int(a.split("=")[1]) for a in sys.argv[1:] if a.startswith("--trials=")), 5
 )
-sf_dir = next(
-    (a.split("=")[1] for a in sys.argv[1:] if a.startswith("--sf=")),
-    "/root/testdata/sf0.1",
-)
 
+from __spark_entry__ import SMOKE_SF_DIR
 from prueba_tecnica_analista_etl_spark.plans import REGISTRY
 from prueba_tecnica_analista_etl_spark.session import get_spark
 
-spark = get_spark(app_name="ab-r15")
+sf_dir = next(
+    (a.split("=")[1] for a in sys.argv[1:] if a.startswith("--sf=")),
+    os.path.join(os.path.dirname(SMOKE_SF_DIR), "sf0.1"),
+)
+
+spark = get_spark(app_name="ab")
 spark.sparkContext.setLogLevel("ERROR")
 
 names = args or sorted(REGISTRY)

@@ -1,11 +1,13 @@
 #!/usr/bin/env python
-"""Capture .explain('formatted') for every registry query (r14 opt round).
+"""Capture .explain('formatted') for every registry query.
 
-Writes plans/r14/<query>_<tag>.txt and a JSON summary of plan-shape
-stats (Exchange count, join strategies, Python eval nodes, scans,
-pushed filters) to plans/r14/_summary_<tag>.json.
+Writes plans/<round>/<query>_<tag>.txt and a JSON summary of
+plan-shape stats (Exchange count, join strategies, Python eval nodes,
+scans, pushed filters) to plans/<round>/_summary_<tag>.json.
 
-Usage: python tools_r14_capture_plans.py <tag> [sf_dir]
+Usage: python tools_capture_plans.py <round> <tag> [sf_dir]
+
+sf_dir defaults to the sf0.1 corpus next to the smoke corpus.
 """
 from __future__ import annotations
 
@@ -18,15 +20,23 @@ import contextlib
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-TAG = sys.argv[1] if len(sys.argv) > 1 else "before"
-SF_DIR = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-OUT_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r14")
+if len(sys.argv) < 3:
+    raise SystemExit(__doc__)
+ROUND, TAG = sys.argv[1], sys.argv[2]
+OUT_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", ROUND)
 os.makedirs(OUT_DIR, exist_ok=True)
 
 os.environ.setdefault("SPARK_GRAFT_LSH_TRUTH_FRACTION", "0.5")
 
+from __spark_entry__ import SMOKE_SF_DIR
 from prueba_tecnica_analista_etl_spark.plans import REGISTRY
 from prueba_tecnica_analista_etl_spark.session import get_spark
+
+SF_DIR = (
+    sys.argv[3]
+    if len(sys.argv) > 3
+    else os.path.join(os.path.dirname(SMOKE_SF_DIR), "sf0.1")
+)
 
 spark = get_spark(app_name="capture-plans")
 spark.sparkContext.setLogLevel("ERROR")
