@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from prueba_tecnica_analista_etl_spark._swap import staged, swap, sweep
 from prueba_tecnica_analista_etl_spark.functions.vectors import (
     as_double,
     assign_clusters,
@@ -395,33 +396,25 @@ def ivf_rebalance(
     """Re-fit the quantizer on the CURRENT index contents and rewrite
     the layout — the action ``ivf_drift_census``'s trigger recommends.
 
-    Crash-safe by the rename-aside protocol (the bucketed_upsert
-    ordering applied to directories): the new index is built whole at
-    ``{path}__rebuild``, the live index is moved aside, the rebuild is
-    promoted, and only then is the old index deleted — at every
-    interruption point a complete index exists on disk (recover by
-    renaming whichever of ``{path}``/``{path}__rebuild``/
-    ``{path}__old`` survives; the sidecar schema + model make any of
-    them self-contained). Returns the new centroid model."""
-    import shutil
-
-    rebuild = f"{path}__rebuild"
-    old = f"{path}__old"
+    Crash-safe through ``_swap``: after an entry sweep that restores an
+    index a killed earlier rebalance left set aside, the new index is
+    built whole in a staged sibling of ``path`` and swapped in, so a
+    complete index (old or new) stays at ``path``; the sidecar schema
+    and model make it self-contained. Returns the new centroid model."""
+    parent, name = os.path.split(os.path.abspath(path))
+    sweep(parent, name)
     live = _read_data(spark, path).select(
         F.col(id_col), F.col("vector").alias("embedding")
     )
     # localCheckpoint: the rebuild's fit + assignment must read the
     # CURRENT files, not re-list the directory mid-swap.
     live = live.localCheckpoint()
-    shutil.rmtree(rebuild, ignore_errors=True)
+    rebuild = staged(path)
     # ivf_write_index snapshots the drift baseline itself — no second
     # stats pass here.
     C = ivf_write_index(
         live, rebuild, k=k, iters=iters, id_col=id_col,
         vec_col="embedding",
     )
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(rebuild, path)
-    shutil.rmtree(old)
+    swap(path, rebuild)
     return C

@@ -17,11 +17,13 @@ validation and reject routing are map-side; the merge cost is the
 sink's — ``foreach_batch_upsert_partitioned`` rewrites only the
 partitions incoming keys touch, which is the 100 TB shape (the
 whole-target variant is kept for small dimension-style targets).
-Restart safety is two independent layers: Spark's checkpoint makes
-file ingestion exactly-once per *source file*, and the ``etl_control``
+Restart safety is three independent layers: Spark's checkpoint makes
+file ingestion exactly-once per *source file*; the ``etl_control``
 batchId ledger makes the merge idempotent even if a crash lands
 between sink commit and checkpoint commit (the classic
-foreachBatch at-least-once window).
+foreachBatch at-least-once window); and the sink writes each merge to
+a staged dir and swaps it in, sweeping a killed swap's leftovers on
+entry, so the target always holds the old or the new data.
 """
 
 from __future__ import annotations

@@ -24,9 +24,11 @@ Design for 100 TB:
   (:func:`verify_training_shards`).
 * **One job writes everything**: ``partitionBy(shard_id)`` emits every
   shard in a single pass; the manifest is a second, O(shards)
-  aggregate over the same frame. ``tmp-then-rename`` makes the export
-  atomic-enough: a crashed export leaves a ``._tmp`` dir, never a
-  half-valid manifest next to live data.
+  aggregate over the same frame. The export is written whole to a
+  staged dir and swapped in through ``_swap``, after an entry sweep
+  that repairs a killed earlier export: ``path`` always holds a
+  complete export (old or new), never a half-valid manifest next to
+  live data.
 """
 
 from __future__ import annotations
@@ -38,6 +40,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from prueba_tecnica_analista_etl_spark._swap import staged, swap, sweep
 
 MANIFEST = "_manifest"
 DATA = "data"
@@ -146,8 +150,9 @@ def export_training_shards(
             n_shards, F.col(SHARD_COL)
         ).sortWithinPartitions(SHARD_COL, order_col)
 
-    tmp = path + "._tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
+    parent, name = os.path.split(os.path.abspath(path))
+    sweep(parent, name)
+    tmp = staged(path)
     sharded.write.partitionBy(SHARD_COL).mode("overwrite").parquet(
         os.path.join(tmp, DATA)
     )
@@ -204,9 +209,7 @@ def export_training_shards(
         "overwrite"
     ).parquet(os.path.join(tmp, MANIFEST))
 
-    # atomic-enough swap: the live dir appears only fully written
-    shutil.rmtree(path, ignore_errors=True)
-    os.rename(tmp, path)
+    swap(path, tmp)
     from prueba_tecnica_analista_etl_spark.artifacts import (
         invalidate_corpus,
     )

@@ -82,18 +82,12 @@ def compact_parquet(
     input files are wildly skewed and a straggler output file would
     recreate the problem.
 
-    The rewrite is crash-safe via the upsert sink's swap discipline:
-    write to ``<path>._tmp_compact``, rename the live dir aside,
-    rename the tmp in, delete the old — every crash point leaves
-    either the old or the new dir recoverable by ``_recover`` (shared
-    with the streaming sink, which uses the same suffix convention).
-    The swap dirs are SIBLINGS of ``path`` — safe for a standalone
-    table dir, but NEVER call this directly on a leaf inside a
-    partitioned table root (``.../data/day=X``): the siblings would
-    land inside the table root, contain ``=``, and be discovered as
-    bogus partitions by concurrent readers. Use
-    :func:`compact_partitioned` there — it swaps through dot-prefixed
-    dirs Spark's path filter ignores.
+    The rewrite is crash-safe through ``_swap``: it is written whole to
+    a staged sibling of ``path`` and swapped in, after an entry sweep
+    that repairs a killed earlier pass. The staged and set-aside dirs
+    are dot-prefixed, which Spark's partition discovery ignores, so
+    ``path`` may be a standalone table dir or a leaf of a partitioned
+    table root (``.../data/day=X``) that readers scan meanwhile.
 
     SINGLE-WRITER DISCIPLINE: never run while a writer (streaming sink,
     merge job) is active on ``path``. The compactor snapshots the file
@@ -107,12 +101,10 @@ def compact_parquet(
     import math
     import os
 
-    from prueba_tecnica_analista_etl_spark.streaming.upsert_sink import (
-        _recover,
-        _swap_in,
-    )
+    from prueba_tecnica_analista_etl_spark._swap import staged, swap, sweep
 
-    _recover(path)
+    parent, name = os.path.split(os.path.abspath(path))
+    sweep(parent, name)
     part_dirs = [
         e.name
         for e in os.scandir(path)
@@ -135,9 +127,9 @@ def compact_parquet(
     n_files = max(1, math.ceil(total / target_bytes))
     df = spark.read.parquet(path)
     df = df.repartition(n_files) if balance else df.coalesce(n_files)
-    tmp = path + "._tmp_compact"
+    tmp = staged(path)
     df.write.mode("overwrite").parquet(tmp)
-    _swap_in(path, tmp, "compact")
+    swap(path, tmp)
     from prueba_tecnica_analista_etl_spark.artifacts import (
         invalidate_corpus,
     )
@@ -148,30 +140,6 @@ def compact_parquet(
         for e in os.scandir(path)
         if e.is_file() and e.name.endswith(".parquet")
     )
-
-
-_CMP_TMP = ".cmp_tmp_"
-_CMP_OLD = ".cmp_old_"
-
-
-def _recover_compaction(data_path: str) -> None:
-    """Sweep a partitioned table root for leftovers of a crashed
-    leaf-compaction pass. A ``.cmp_old_<leaf>`` whose live leaf is
-    missing (crash between rename-aside and rename-in) IS the data —
-    restore it; one whose leaf exists is a stale copy of a completed
-    swap — remove it. ``.cmp_tmp_*`` write dirs are always stale."""
-    import os
-    import shutil
-
-    for e in sorted(os.scandir(data_path), key=lambda x: x.name):
-        if e.name.startswith(_CMP_OLD):
-            live = os.path.join(data_path, e.name[len(_CMP_OLD):])
-            if os.path.exists(live):
-                shutil.rmtree(e.path, ignore_errors=True)
-            else:
-                os.rename(e.path, live)
-        elif e.name.startswith(_CMP_TMP):
-            shutil.rmtree(e.path, ignore_errors=True)
 
 
 def compact_partitioned(
@@ -194,58 +162,37 @@ def compact_partitioned(
     never merged across, and each leaf swaps independently, so a crash
     mid-pass leaves every partition either old or new, never mixed.
 
-    Swap hygiene, distinct from :func:`compact_parquet`: the tmp and
-    rename-aside dirs live INSIDE the table root, so they use
-    dot-prefixed names (``.cmp_tmp_day=X`` / ``.cmp_old_day=X``) that
-    Spark's path filter ignores — a concurrent reader of the table
-    never discovers them as bogus partitions, and the entry sweep
-    (:func:`_recover_compaction`) restores a leaf stranded mid-swap
-    before the dir scan can misread it as data.
+    Each leaf is rewritten by :func:`compact_parquet`, whose staged and
+    set-aside dirs are dot-prefixed siblings inside the table root that
+    Spark's partition discovery ignores; the entry sweep restores a
+    leaf a killed earlier pass left set aside before the dir scan
+    below could miss it.
 
     SINGLE-WRITER DISCIPLINE: same as :func:`compact_parquet` — never
     run concurrently with an active writer on the same leaves; a merge
     committing between the leaf snapshot and its swap would be lost.
     Run in the sink's idle window.
     """
-    import math
     import os
-    import shutil
+
+    from prueba_tecnica_analista_etl_spark._swap import sweep
 
     done: dict[str, int] = {}
     if not os.path.isdir(data_path):
         return done
-    _recover_compaction(data_path)
+    sweep(data_path)
     for e in sorted(os.scandir(data_path), key=lambda x: x.name):
         if not e.is_dir() or "=" not in e.name or e.name.startswith("."):
             continue
-        files = [
-            f
-            for f in os.scandir(e.path)
-            if f.is_file() and f.name.endswith(".parquet")
-        ]
-        if len(files) < min_files:
-            continue
-        total = sum(f.stat().st_size for f in files)
-        n_files = max(1, math.ceil(total / target_bytes))
-        df = spark.read.parquet(e.path)
-        df = df.repartition(n_files) if balance else df.coalesce(n_files)
-        tmp = os.path.join(data_path, _CMP_TMP + e.name)
-        df.write.mode("overwrite").parquet(tmp)
-        old = os.path.join(data_path, _CMP_OLD + e.name)
-        os.rename(e.path, old)
-        os.rename(tmp, e.path)
-        shutil.rmtree(old, ignore_errors=True)
-        done[e.name] = sum(
+        n_files = sum(
             1
             for f in os.scandir(e.path)
             if f.is_file() and f.name.endswith(".parquet")
         )
-    if done:
-        from prueba_tecnica_analista_etl_spark.artifacts import (
-            invalidate_corpus,
-        )
-
-        invalidate_corpus(data_path)
+        if n_files >= min_files:
+            done[e.name] = compact_parquet(
+                spark, e.path, target_bytes, balance
+            )
     return done
 
 

@@ -1,22 +1,26 @@
-"""Stateful streaming upsert sink (T5/T7/T8): the reference's
+"""Stateful streaming upsert sinks (T5/T7/T8): the reference's
 staging→UPSERT procedure per micro-batch, via ``foreachBatch``.
 
-Each micro-batch is merged into a parquet target with the J4
-join-rewrite, written to a temp path and atomically swapped (the
-metastore-free equivalent of the reference's re-runnable DROP+ADD
-idempotency). An ``etl_control`` ledger records (batch_id, estado,
-filas) per batch — reference design ``nb:372``/``nb:356`` — and makes
-replays idempotent: an already-recorded batchId is skipped, so
-at-least-once delivery becomes effectively-once in the sink.
+Both sinks run one micro-batch frame and differ only in merge scope:
+:func:`foreach_batch_upsert` rewrites the whole target,
+:func:`foreach_batch_upsert_partitioned` only the partitions the
+batch's keys fall in. Per micro-batch the frame
 
-DLQ (T6): rows failing the caller's rules are routed to
-``{target}/_rejects`` with a ``reject_reason`` column instead of
-poisoning the merge. Reject writes are scoped to a
-``batch_id=<n>`` partition dir and OVERWRITE it, so a replayed
-in-flight batch (crash after the reject write but before the ledger
-row committed) replaces its own partial output instead of appending a
-duplicate — the DLQ is idempotent under replay, same as the merge.
-Readers get the batch id back as a partition column for free.
+1. skips a batch id the ``etl_control`` ledger already holds
+   (reference design ``nb:372``/``nb:356``), so at-least-once delivery
+   is effectively-once in the sink;
+2. persists the batch once for the reject split, the DLQ write and
+   the merge;
+3. routes rows failing the caller's rules (T6) to
+   ``{target}/_rejects/batch_id=<n>`` with a ``reject_reason`` column,
+   OVERWRITING that batch's dir, so a replayed in-flight batch
+   replaces its own partial output instead of appending a duplicate;
+4. sweeps the leftovers of a killed earlier swap, merges with the J4
+   join-rewrite, writes the result whole to a staged dir and swaps it
+   in (``_swap``: the metastore-free equivalent of the reference's
+   re-runnable DROP+ADD idempotency — every crash point leaves the old
+   or the new data);
+5. appends (batch_id, estado, filas) to the ledger.
 """
 
 from __future__ import annotations
@@ -30,6 +34,7 @@ from typing import TypeVar
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from prueba_tecnica_analista_etl_spark._swap import staged, swap, sweep
 from prueba_tecnica_analista_etl_spark.operators.dedupe import keep_first
 from prueba_tecnica_analista_etl_spark.operators.quality import split_rejects
 from prueba_tecnica_analista_etl_spark.operators.upsert import (
@@ -78,50 +83,6 @@ def _paths(target: str) -> tuple[str, str, str]:
     )
 
 
-def _swap_in(data_path: str, tmp: str, batch_id: int) -> None:
-    """Atomic-enough directory swap: rename the live dir ASIDE, rename
-    the fully-written tmp dir into place, then delete the old dir.
-
-    Order matters — the old ``rmtree(data) → rename(tmp, data)`` had a
-    crash window with NO live dir and no ledger entry, so a replayed
-    batch took the first-batch path and silently rebuilt the target
-    from one micro-batch. Here every crash point leaves either the old
-    dir or the new dir recoverable (see :func:`_recover`).
-    """
-    old = data_path + f"._old_{batch_id}"
-    if os.path.exists(data_path):
-        os.rename(data_path, old)
-    os.rename(tmp, data_path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-
-
-def _recover(data_path: str) -> None:
-    """Crash recovery, run before every merge decision.
-
-    - live dir present: any ``._old_*`` (crash after rename-in, before
-      delete) and ``._tmp_*`` (crash before swap) leftovers are stale —
-      remove them.
-    - live dir missing but a ``._old_*`` survives (crash between
-      rename-aside and rename-in): restore it — it IS the accumulated
-      base, and without this the replay would rebuild from one batch.
-    """
-    parent = os.path.dirname(data_path) or "."
-    base = os.path.basename(data_path)
-    leftovers = sorted(
-        n
-        for n in (os.listdir(parent) if os.path.isdir(parent) else [])
-        if n.startswith(base + "._old_") or n.startswith(base + "._tmp_")
-    )
-    if not os.path.exists(data_path):
-        olds = [n for n in leftovers if "._old_" in n]
-        if olds:
-            os.rename(os.path.join(parent, olds[-1]), data_path)
-            leftovers = [n for n in leftovers if n != olds[-1]]
-    for n in leftovers:
-        shutil.rmtree(os.path.join(parent, n), ignore_errors=True)
-
-
 def _write_rejects(rejected: DataFrame, rej_path: str, batch_id: int) -> None:
     """Idempotent DLQ write: each batch owns ``{rej}/batch_id=<n>`` and
     OVERWRITES it, so a replayed in-flight batch (crash between the
@@ -133,7 +94,7 @@ def _write_rejects(rejected: DataFrame, rej_path: str, batch_id: int) -> None:
     append-mode files; mixing flat files with ``batch_id=`` dirs makes
     partition discovery fail ('conflicting directory structures'), so
     any flat parquet files are first moved into ``batch_id=-1`` (the
-    unattributed-legacy bucket) — a pure rename, done once."""
+    unattributed-legacy bucket) — a pure file move, done once."""
     if os.path.isdir(rej_path):
         flat = [
             e
@@ -144,7 +105,7 @@ def _write_rejects(rejected: DataFrame, rej_path: str, batch_id: int) -> None:
             legacy = os.path.join(rej_path, "batch_id=-1")
             os.makedirs(legacy, exist_ok=True)
             for e in flat:
-                os.rename(e.path, os.path.join(legacy, e.name))
+                shutil.move(e.path, legacy)
     rejected.write.mode("overwrite").parquet(
         os.path.join(rej_path, f"batch_id={batch_id}")
     )
@@ -155,6 +116,62 @@ def read_control(spark: SparkSession, target: str) -> DataFrame | None:
     if not os.path.exists(ctrl):
         return None
     return spark.read.parquet(ctrl)
+
+
+
+
+def _sink(
+    spark: SparkSession,
+    target: str,
+    split: Callable[[DataFrame], tuple[DataFrame, DataFrame | None]],
+    merge: Callable[[DataFrame], int],
+) -> Callable[[DataFrame, int], None]:
+    """The micro-batch frame both sinks share. ``split(batch)`` returns
+    the rows to merge and the rejected rows (None without rules);
+    ``merge(rows)`` writes and swaps in the merged target and returns
+    the ``filas`` the ledger records."""
+    data_path, ctrl_path, rej_path = _paths(target)
+
+    def process(batch: DataFrame, batch_id: int) -> None:
+        ctrl = read_control(spark, target)
+        if ctrl is not None and (
+            ctrl.filter(ctrl.batch_id == batch_id).limit(1).count() > 0
+        ):
+            return  # replayed batch → already merged (idempotent)
+
+        # the batch feeds the reject split, the DLQ write and the
+        # merge — persist once instead of re-evaluating the source
+        # (and the rules) for each action
+        src = batch.persist()
+        try:
+            rows, rejected = split(src)
+            if rejected is not None and rejected.limit(1).count() > 0:
+                _write_rejects(rejected, rej_path, batch_id)
+            sweep(target)
+            sweep(data_path)
+            n = merge(rows)
+            spark.createDataFrame(
+                [(int(batch_id), "OK", int(n))],
+                "batch_id long, estado string, filas long",
+            ).write.mode("append").parquet(ctrl_path)
+        finally:
+            src.unpersist()
+
+    return process
+
+
+def _split_upserts(
+    batch: DataFrame, keys: Sequence[str], rules: dict[str, Column] | None
+) -> tuple[DataFrame, DataFrame | None]:
+    """Plain-upsert intake: rule failures split off, then the batch is
+    made unique on the keys — upsert()'s precondition, which an
+    at-least-once source can break WITHIN one batch (e.g. overlapping
+    landing files). The survivor pick is arbitrary: duplicates are
+    redeliveries of the same row."""
+    rejected = None
+    if rules:
+        batch, rejected = split_rejects(batch, rules)
+    return batch.dropDuplicates(list(keys)), rejected
 
 
 def foreach_batch_upsert(
@@ -195,118 +212,57 @@ def foreach_batch_upsert(
     """
     if op_col is not None and cdc_order is None:
         raise ValueError("op_col requires cdc_order (last-op order)")
-    data_path, ctrl_path, rej_path = _paths(target)
+    data_path = _paths(target)[0]
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        ctrl = read_control(spark, target)
-        if ctrl is not None and (
-            ctrl.filter(ctrl.batch_id == batch_id).limit(1).count() > 0
-        ):
-            return  # replayed batch → already merged (idempotent)
+    def split(batch: DataFrame) -> tuple[DataFrame, DataFrame | None]:
+        if op_col is None:
+            return _split_upserts(batch, keys, rules)
+        # CDC: compaction runs FIRST (the survivor MUST be the newest
+        # op) and rules see only the FINAL non-delete op per key.
+        # Delete markers bypass validation by design (they typically
+        # carry NULL payload columns, which ordinary rules would
+        # quarantine — silently losing the delete); and a rejected
+        # final upsert quarantines its key untouched rather than
+        # resurrecting a superseded older op.
+        batch = keep_first(batch, keys, cdc_order)
+        if not rules:
+            return batch, None
+        is_delete = F.col(op_col).eqNullSafe(delete_value)
+        accepted, rejected = split_rejects(batch.filter(~is_delete), rules)
+        return accepted.unionByName(batch.filter(is_delete)), rejected
 
-        # the batch feeds the reject split, the DLQ write and the
-        # merge — persist once instead of re-evaluating the source
-        # (and the rules) for each action
-        src = batch.persist()
-        batch = src
-        try:
-            # upsert()/cdc_apply() require the incoming side unique on
-            # the keys (an at-least-once source can double a key
-            # WITHIN one batch — e.g. overlapping landing files). For
-            # plain upsert the survivor pick is arbitrary (duplicates
-            # are redeliveries of the same row); for CDC the pick MUST
-            # be the newest op, so the compaction uses cdc_order.
-            #
-            # Order vs rules: in CDC mode compaction runs FIRST and
-            # rules see only the FINAL non-delete op per key. Delete
-            # markers bypass validation by design (they typically
-            # carry NULL payload columns, which ordinary rules would
-            # quarantine — silently losing the delete); and a
-            # rejected final upsert quarantines its key untouched
-            # rather than resurrecting a superseded older op.
+    def merge(batch: DataFrame) -> int:
+        if os.path.exists(data_path):
+            base = spark.read.parquet(data_path)
             if op_col is not None:
-                batch = keep_first(batch, keys, cdc_order)
-                if rules:
-                    is_delete = F.col(op_col).eqNullSafe(delete_value)
-                    accepted, rejected = split_rejects(
-                        batch.filter(~is_delete), rules
-                    )
-                    if rejected.limit(1).count() > 0:
-                        _write_rejects(rejected, rej_path, batch_id)
-                    batch = accepted.unionByName(
-                        batch.filter(is_delete)
-                    )
+                merged = cdc_apply(
+                    base,
+                    batch.select(*base.columns, op_col),
+                    keys,
+                    op_col=op_col,
+                    delete_value=delete_value,
+                )
             else:
-                if rules:
-                    batch, rejected = split_rejects(batch, rules)
-                    if rejected.limit(1).count() > 0:
-                        _write_rejects(rejected, rej_path, batch_id)
-                batch = batch.dropDuplicates(list(keys))
+                merged = upsert(base, batch.select(*base.columns), keys)
+        elif op_col is not None:
+            # first batch: the target is born from the surviving
+            # (non-delete) final ops.  eqNullSafe, matching
+            # cdc_apply's contract — a NULL op is an upsert, and
+            # `!= delete_value` would evaluate NULL and silently
+            # drop it on exactly (and only) the batch where the
+            # target does not exist yet.
+            merged = batch.filter(
+                ~F.col(op_col).eqNullSafe(delete_value)
+            ).drop(op_col)
+        else:
+            merged = batch
+        tmp = staged(data_path)
+        merged.write.mode("overwrite").parquet(tmp)
+        swap(data_path, tmp)
+        # metadata-only count (parquet footers), not a data scan
+        return spark.read.parquet(data_path).count()
 
-            _recover(data_path)
-            if os.path.exists(data_path):
-                base = spark.read.parquet(data_path)
-                if op_col is not None:
-                    merged = cdc_apply(
-                        base,
-                        batch.select(*base.columns, op_col),
-                        keys,
-                        op_col=op_col,
-                        delete_value=delete_value,
-                    )
-                else:
-                    merged = upsert(
-                        base, batch.select(*base.columns), keys
-                    )
-            elif op_col is not None:
-                # first batch: the target is born from the surviving
-                # (non-delete) final ops.  eqNullSafe, matching
-                # cdc_apply's contract — a NULL op is an upsert, and
-                # `!= delete_value` would evaluate NULL and silently
-                # drop it on exactly (and only) the batch where the
-                # target does not exist yet.
-                merged = batch.filter(
-                    ~F.col(op_col).eqNullSafe(delete_value)
-                ).drop(op_col)
-            else:
-                merged = batch
-
-            # write-then-swap: the target is never half-written and
-            # never lost (rename-aside, rename-in, delete — _swap_in)
-            tmp = data_path + f"._tmp_{batch_id}"
-            merged.write.mode("overwrite").parquet(tmp)
-            _swap_in(data_path, tmp, batch_id)
-
-            # metadata-only count (parquet footers), not a data scan
-            n = spark.read.parquet(data_path).count()
-            spark.createDataFrame(
-                [(int(batch_id), "OK", int(n))],
-                "batch_id long, estado string, filas long",
-            ).write.mode("append").parquet(ctrl_path)
-        finally:
-            src.unpersist()
-
-    return process
-
-
-def _recover_partitioned(data_path: str, target: str) -> None:
-    """Partitioned-target crash recovery: a ``._old_<id>`` root holds
-    partition dirs renamed aside mid-swap. Any of them missing from the
-    live tree (crash between rename-aside and rename-in) is restored;
-    the rest are stale copies of dirs whose replacement landed. Stale
-    ``._tmp_*`` write dirs are removed."""
-    if not os.path.isdir(target):
-        return
-    for n in sorted(os.listdir(target)):
-        p = os.path.join(target, n)
-        if n.startswith("._old_"):
-            for d in os.listdir(p):
-                live = os.path.join(data_path, d)
-                if not os.path.exists(live):
-                    os.rename(os.path.join(p, d), live)
-            shutil.rmtree(p, ignore_errors=True)
-        elif n.startswith(os.path.basename(data_path) + "._tmp_"):
-            shutil.rmtree(p, ignore_errors=True)
+    return _sink(spark, target, split, merge)
 
 
 def foreach_batch_upsert_partitioned(
@@ -321,11 +277,12 @@ def foreach_batch_upsert_partitioned(
     The target is laid out as ``data/{partition_col}={v}/…`` and each
     micro-batch rewrites ONLY the partitions its keys fall in: the base
     is read partition-pruned to the batch's partition values, merged
-    with the J4 join-rewrite, written to a tmp dir, and the touched
-    partition dirs are swapped in one by one (rename-aside → rename-in
-    → delete, recoverable at every crash point). Untouched partitions'
+    with the J4 join-rewrite, written to a staged dir, and the touched
+    partition dirs are swapped in one by one. Untouched partitions'
     files are never opened, let alone rewritten — per-batch cost is
-    O(|touched partitions| + |batch|), not O(|target|).
+    O(|touched partitions| + |batch|), not O(|target|). A crash
+    between two partition swaps leaves some partitions merged and no
+    ledger row; the replayed batch merges again, which is a fixpoint.
 
     ``partition_col`` must be a stable function of the key columns
     (e.g. a date or hash-bucket of the key), otherwise a key could move
@@ -335,89 +292,50 @@ def foreach_batch_upsert_partitioned(
     (counting the whole target would be the O(|target|) scan this
     variant exists to avoid).
     """
-    data_path, ctrl_path, rej_path = _paths(target)
+    data_path = _paths(target)[0]
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        ctrl = read_control(spark, target)
-        if ctrl is not None and (
-            ctrl.filter(ctrl.batch_id == batch_id).limit(1).count() > 0
-        ):
-            return
-
-        src = batch.persist()
-        batch = src
-        try:
-            if rules:
-                batch, rejected = split_rejects(batch, rules)
-                if rejected.limit(1).count() > 0:
-                    _write_rejects(rejected, rej_path, batch_id)
-
-            # intra-batch key uniqueness — upsert()'s precondition;
-            # see the whole-target variant for the rationale
-            batch = batch.dropDuplicates(list(keys))
-
-            _recover_partitioned(data_path, target)
-            vals = [
-                r[0]
-                for r in batch.select(partition_col).distinct().collect()
-            ]
-            # isin() never matches NULL (SQL three-valued logic), but a
-            # NULL partition value lands in __HIVE_DEFAULT_PARTITION__
-            # and its dir IS swapped below — without the explicit
-            # isNull branch the base rows of that partition would be
-            # excluded from the merge and silently dropped by the swap.
-            nonnull = [v for v in vals if v is not None]
-            touched = (
-                F.col(partition_col).isin(nonnull)
-                if nonnull
-                else F.lit(False)
-            )
-            if len(nonnull) < len(vals):
-                touched = touched | F.col(partition_col).isNull()
-            if os.path.exists(data_path):
-                base_slice = (
-                    spark.read.option("basePath", data_path)
-                    .parquet(data_path)
-                    .filter(touched)
-                )
-                merged = upsert(
-                    base_slice, batch.select(*base_slice.columns), keys
-                )
-            else:
-                merged = batch
-
-            tmp = data_path + f"._tmp_{batch_id}"
-            merged.write.partitionBy(partition_col).mode(
-                "overwrite"
-            ).parquet(tmp)
-
-            part_dirs = [
-                d
-                for d in os.listdir(tmp)
-                if d.startswith(f"{partition_col}=")
-            ]
-            old_root = os.path.join(target, f"._old_{batch_id}")
-            os.makedirs(old_root, exist_ok=True)
-            os.makedirs(data_path, exist_ok=True)
-            for d in sorted(part_dirs):
-                live = os.path.join(data_path, d)
-                if os.path.exists(live):
-                    os.rename(live, os.path.join(old_root, d))
-                os.rename(os.path.join(tmp, d), live)
-            shutil.rmtree(old_root, ignore_errors=True)
-            shutil.rmtree(tmp, ignore_errors=True)
-
-            n_slice = (
+    def merge(batch: DataFrame) -> int:
+        vals = [
+            r[0] for r in batch.select(partition_col).distinct().collect()
+        ]
+        # isin() never matches NULL (SQL three-valued logic), but a
+        # NULL partition value lands in __HIVE_DEFAULT_PARTITION__
+        # and its dir IS swapped below — without the explicit
+        # isNull branch the base rows of that partition would be
+        # excluded from the merge and silently dropped by the swap.
+        nonnull = [v for v in vals if v is not None]
+        touched = (
+            F.col(partition_col).isin(nonnull) if nonnull else F.lit(False)
+        )
+        if len(nonnull) < len(vals):
+            touched = touched | F.col(partition_col).isNull()
+        if os.path.exists(data_path):
+            base_slice = (
                 spark.read.option("basePath", data_path)
                 .parquet(data_path)
                 .filter(touched)
-                .count()
             )
-            spark.createDataFrame(
-                [(int(batch_id), "OK", int(n_slice))],
-                "batch_id long, estado string, filas long",
-            ).write.mode("append").parquet(ctrl_path)
-        finally:
-            src.unpersist()
+            merged = upsert(
+                base_slice, batch.select(*base_slice.columns), keys
+            )
+        else:
+            merged = batch
+        tmp = staged(data_path)
+        merged.write.partitionBy(partition_col).mode("overwrite").parquet(
+            tmp
+        )
+        os.makedirs(data_path, exist_ok=True)
+        for d in sorted(os.listdir(tmp)):
+            if d.startswith(f"{partition_col}="):
+                swap(os.path.join(data_path, d), os.path.join(tmp, d))
+        shutil.rmtree(tmp, ignore_errors=True)
+        return (
+            spark.read.option("basePath", data_path)
+            .parquet(data_path)
+            .filter(touched)
+            .count()
+        )
 
-    return process
+    return _sink(
+        spark, target, lambda b: _split_upserts(b, keys, rules), merge
+    )

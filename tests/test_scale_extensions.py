@@ -2286,14 +2286,14 @@ def test_ivf_append_preserves_search_and_drift_triggers_rebalance(
     assert drifted["drift"] > 0.01
     assert drifted["refit_recommended"]
 
-    # rebalance: re-fit on current contents, rename-aside swap, zero
+    # rebalance: re-fit on current contents, staged swap, zero
     # row loss, drift baseline reset to ~0
     ivf_rebalance(spark, inc, k=k, iters=2)
     after = ivf_drift_census(spark, inc, refit_drift=0.01)
     assert after["rows"] == n_all + 300
     assert abs(after["drift"]) < 1e-9  # fresh baseline == fresh census
-    assert not os.path.exists(inc + "__rebuild")
-    assert not os.path.exists(inc + "__old")
+    parent, name = os.path.split(inc)
+    assert [n for n in os.listdir(parent) if n.startswith(f".{name}.")] == []
     got = ivf_search_index(spark, inc, query, nprobe=k, topk=10)
     assert got.count() == 10
 

@@ -401,11 +401,12 @@ def test_compact_parquet_merges_small_files(spark, sf_dir, tmp_path):
     want = sorted(map(tuple, ev.collect()))
 
     # simulate a crashed earlier compaction attempt
-    os.makedirs(path + "._tmp_compact", exist_ok=True)
+    stale = str(tmp_path / ".t.swap-new-1")
+    os.makedirs(stale, exist_ok=True)
 
     n = compact_parquet(spark, path, target_bytes=total // 4 + 1)
     assert 1 <= n <= 5
-    assert not os.path.exists(path + "._tmp_compact")
+    assert not os.path.exists(stale)
     assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
 
     n2 = compact_parquet(spark, path, target_bytes=total * 2, balance=True)
@@ -454,18 +455,18 @@ def test_compact_partitioned_respects_boundaries(spark, sf_dir, tmp_path):
     # second pass: everything is one file per partition -> all skipped
     assert compact_partitioned(spark, path, target_bytes=1 << 30) == {}
 
-    # crash recovery: a leaf stranded mid-swap (renamed aside, tmp
-    # never renamed in) is restored by the entry sweep; a stale tmp
-    # dir is removed; content is intact afterwards
+    # crash recovery: a leaf stranded mid-swap (renamed aside, staged
+    # dir never renamed in) is restored by the entry sweep; a stale
+    # staged dir is removed; content is intact afterwards
     leaf = parts[0]
-    os.rename(
-        os.path.join(path, leaf), os.path.join(path, ".cmp_old_" + leaf)
-    )
-    os.makedirs(os.path.join(path, ".cmp_tmp_" + leaf), exist_ok=True)
+    aside = os.path.join(path, f".{leaf}.swap-old-1")
+    stale = os.path.join(path, f".{leaf}.swap-new-1")
+    os.rename(os.path.join(path, leaf), aside)
+    os.makedirs(stale, exist_ok=True)
     compact_partitioned(spark, path, target_bytes=1 << 30)
     assert os.path.isdir(os.path.join(path, leaf))
-    assert not os.path.exists(os.path.join(path, ".cmp_old_" + leaf))
-    assert not os.path.exists(os.path.join(path, ".cmp_tmp_" + leaf))
+    assert not os.path.exists(aside)
+    assert not os.path.exists(stale)
     assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
 
 
@@ -784,7 +785,7 @@ def test_export_training_shards_detects_tampering(spark, sf_dir, tmp_path):
 def test_export_training_shards_rejects_empty_frame(spark, tmp_path):
     """ADVICE r7: a zero-row input used to write zero part files and
     crash mid-export on read-back schema inference, stranding a
-    ``._tmp`` dir. Both sizing paths must fail with a clear error and
+    staged dir. Both sizing paths must fail with a clear error and
     leave NOTHING behind — the target_rows path before any write (its
     sizing count already proves emptiness), the n_shards path right
     after the (empty, cheap) write via a file-level check, so the
@@ -803,9 +804,9 @@ def test_export_training_shards_rejects_empty_frame(spark, tmp_path):
         with _pytest.raises(ValueError, match="empty frame"):
             export_training_shards(empty, path, "doc_id", **kwargs)
         assert not os.path.exists(path)
-        assert not os.path.exists(path + "._tmp"), (
-            "failed export left a dangling tmp dir"
-        )
+    assert os.listdir(tmp_path) == [], (
+        "failed export left a dangling staged dir"
+    )
 
 
 def test_export_checksum_catches_even_multiplicity_swap(spark, tmp_path):

@@ -15,8 +15,8 @@ from prueba_tecnica_analista_etl_spark.streaming.replay import (
     replay_as_stream,
     write_replay_files,
 )
+from prueba_tecnica_analista_etl_spark._swap import sweep
 from prueba_tecnica_analista_etl_spark.streaming.upsert_sink import (
-    _recover,
     foreach_batch_upsert,
     foreach_batch_upsert_partitioned,
     read_control,
@@ -179,26 +179,38 @@ def test_foreach_batch_upsert_partitioned(spark, sf_dir, tmp_path):
 
 def test_swap_recovery_restores_base(tmp_path):
     """Crash between rename-aside and rename-in leaves no live dir;
-    _recover must restore the accumulated base instead of letting the
-    replay rebuild from one micro-batch."""
+    the entry sweep must restore the accumulated base instead of
+    letting the replay rebuild from one micro-batch."""
     data = tmp_path / "data"
-    old = tmp_path / "data._old_7"
+    old = tmp_path / ".data.swap-old-7"
     old.mkdir()
     (old / "part-0.parquet").write_text("base")
-    stale_tmp = tmp_path / "data._tmp_7"
+    stale_tmp = tmp_path / ".data.swap-new-7"
     stale_tmp.mkdir()
     (stale_tmp / "part-0.parquet").write_text("half-written")
-    _recover(str(data))
+    sweep(str(tmp_path))
     assert data.is_dir()
     assert (data / "part-0.parquet").read_text() == "base"
     assert not stale_tmp.exists()
 
     # live dir present: stale leftovers are swept, live dir untouched
-    old2 = tmp_path / "data._old_8"
+    old2 = tmp_path / ".data.swap-old-8"
     old2.mkdir()
-    _recover(str(data))
+    sweep(str(tmp_path))
     assert (data / "part-0.parquet").read_text() == "base"
     assert not old2.exists()
+
+
+def test_stream_query_reruns_after_clear_artifacts(spark, sf_dir):
+    """clear_artifacts() wipes the replay landing dirs with the rest of
+    the store; the next run must rebuild them rather than replay a
+    path that no longer exists."""
+    from prueba_tecnica_analista_etl_spark.artifacts import clear_artifacts
+
+    q = REGISTRY["q_stream_dedupe"].fn
+    first = q(spark, sf_dir).count()
+    clear_artifacts()
+    assert q(spark, sf_dir).count() == first
 
 
 def test_sessionize_rows_sane(spark, sf_dir):
