@@ -20,7 +20,27 @@ batch's keys fall in. Per micro-batch the frame
    in (``_swap``: the metastore-free equivalent of the reference's
    re-runnable DROP+ADD idempotency — every crash point leaves the old
    or the new data);
-5. appends (batch_id, estado, filas) to the ledger.
+5. appends (batch_id, estado, filas) to the ledger; ``filas`` is the
+   row count of what the merge wrote, counted during the write by an
+   ``Observation``.
+
+A warm batch of the plain (non-CDC) whole-target sink with rejects
+runs 9 Spark jobs:
+
+1. the ledger probe: one filtered ``collect`` of the batch id;
+2. the reject probe: ``isEmpty`` on the persisted batch (one job on a
+   single-file batch; it also fills the cache);
+3. the DLQ write;
+4. the base read's schema inference (the on-disk schema stays the
+   source of truth);
+5. the merge's batch dedup shuffle (the ``first()`` aggregate);
+6. the merge's key-distinct shuffle for the anti-join's build side;
+7. the broadcast of those keys;
+8. the write of the merged rows;
+9. the ledger append: one row built on the JVM, one file.
+
+A batch without rejects skips job 3; the first batch has no ledger
+or base to read.
 """
 
 from __future__ import annotations
@@ -31,7 +51,7 @@ import time
 from collections.abc import Callable, Sequence
 from typing import TypeVar
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from prueba_tecnica_analista_etl_spark._swap import staged, swap, sweep
@@ -45,6 +65,7 @@ from prueba_tecnica_analista_etl_spark.operators.upsert import (
 CONTROL = "_etl_control"
 REJECTS = "_rejects"
 DATA = "data"
+_CONTROL_SCHEMA = "batch_id long, estado string, filas long"
 
 
 _R = TypeVar("_R")
@@ -112,12 +133,16 @@ def _write_rejects(rejected: DataFrame, rej_path: str, batch_id: int) -> None:
 
 
 def read_control(spark: SparkSession, target: str) -> DataFrame | None:
+    """The ``etl_control`` ledger of ``target``: one
+    ``(batch_id long, estado string, filas long)`` row per committed
+    batch, or None before the ledger dir exists. The schema is pinned,
+    not inferred, so a ledger with no committed file (a first append
+    killed before its commit leaves only ``_temporary/``) reads as
+    empty instead of failing schema inference."""
     ctrl = _paths(target)[1]
     if not os.path.exists(ctrl):
         return None
-    return spark.read.parquet(ctrl)
-
-
+    return spark.read.schema(_CONTROL_SCHEMA).parquet(ctrl)
 
 
 def _sink(
@@ -134,8 +159,10 @@ def _sink(
 
     def process(batch: DataFrame, batch_id: int) -> None:
         ctrl = read_control(spark, target)
+        # one job whatever the ledger's file count: limit/take/isEmpty
+        # would scan its partitions in growing rounds
         if ctrl is not None and (
-            ctrl.filter(ctrl.batch_id == batch_id).limit(1).count() > 0
+            ctrl.filter(ctrl.batch_id == batch_id).select("batch_id").collect()
         ):
             return  # replayed batch → already merged (idempotent)
 
@@ -145,14 +172,17 @@ def _sink(
         src = batch.persist()
         try:
             rows, rejected = split(src)
-            if rejected is not None and rejected.limit(1).count() > 0:
+            if rejected is not None and not rejected.isEmpty():
                 _write_rejects(rejected, rej_path, batch_id)
             sweep(target)
             sweep(data_path)
             n = merge(rows)
-            spark.createDataFrame(
-                [(int(batch_id), "OK", int(n))],
-                "batch_id long, estado string, filas long",
+            # built on the JVM: one partition, one ledger file, no
+            # Python-worker round trip
+            spark.range(1, numPartitions=1).select(
+                F.lit(int(batch_id)).cast("long").alias("batch_id"),
+                F.lit("OK").alias("estado"),
+                F.lit(int(n)).cast("long").alias("filas"),
             ).write.mode("append").parquet(ctrl_path)
         finally:
             src.unpersist()
@@ -256,11 +286,14 @@ def foreach_batch_upsert(
             ).drop(op_col)
         else:
             merged = batch
+        # filas = the rows written, counted during the write
+        obs = Observation()
         tmp = staged(data_path)
-        merged.write.mode("overwrite").parquet(tmp)
+        merged.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(tmp)
         swap(data_path, tmp)
-        # metadata-only count (parquet footers), not a data scan
-        return spark.read.parquet(data_path).count()
+        return obs.get["n"]
 
     return _sink(spark, target, split, merge)
 
@@ -320,21 +353,18 @@ def foreach_batch_upsert_partitioned(
             )
         else:
             merged = batch
+        # filas = the rewritten slice's rows, counted during the write
+        obs = Observation()
         tmp = staged(data_path)
-        merged.write.partitionBy(partition_col).mode("overwrite").parquet(
-            tmp
-        )
+        merged.observe(
+            obs, F.count(F.lit(1)).alias("n")
+        ).write.partitionBy(partition_col).mode("overwrite").parquet(tmp)
         os.makedirs(data_path, exist_ok=True)
         for d in sorted(os.listdir(tmp)):
             if d.startswith(f"{partition_col}="):
                 swap(os.path.join(data_path, d), os.path.join(tmp, d))
         shutil.rmtree(tmp, ignore_errors=True)
-        return (
-            spark.read.option("basePath", data_path)
-            .parquet(data_path)
-            .filter(touched)
-            .count()
-        )
+        return obs.get["n"]
 
     return _sink(
         spark, target, lambda b: _split_upserts(b, keys, rules), merge

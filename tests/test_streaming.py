@@ -916,6 +916,122 @@ def test_upsert_sink_dedupes_intra_batch_keys(spark, tmp_path):
     assert spark.read.parquet(os.path.join(target2, "data")).count() == 1
 
 
+def test_sink_survives_uncommitted_first_ledger_append(spark, tmp_path):
+    """A first ledger append killed before its commit leaves
+    ``_etl_control/`` holding only ``_temporary/``. That ledger must
+    read as empty: the next batch merges and records one ledger row
+    instead of failing schema inference on every later batch."""
+    from prueba_tecnica_analista_etl_spark.streaming.upsert_sink import (
+        CONTROL,
+    )
+
+    target = str(tmp_path / "t")
+    os.makedirs(os.path.join(target, CONTROL, "_temporary", "0"))
+    process = foreach_batch_upsert(spark, target, ["event_id"])
+    process(
+        spark.createDataFrame(
+            [(1, 10.0), (2, 20.0)], "event_id long, value double"
+        ),
+        0,
+    )
+    assert spark.read.parquet(os.path.join(target, "data")).count() == 2
+    assert [tuple(r) for r in read_control(spark, target).collect()] == [
+        (0, "OK", 2)
+    ]
+
+
+# Spark jobs of one warm micro-batch with a DLQ write, as listed in the
+# upsert_sink module docstring
+_SINK_JOBS_PER_BATCH = 9
+
+
+def test_upsert_sink_job_budget(spark, tmp_path):
+    """The sink's fixed per-batch cost, counted in Spark jobs through
+    the status store by job tag: every batch after the first stays
+    within the budget, and each ledger append adds one parquet file."""
+    from prueba_tecnica_analista_etl_spark.streaming.upsert_sink import (
+        CONTROL,
+    )
+
+    sc = spark.sparkContext
+    target = str(tmp_path / "t")
+    ctrl_dir = os.path.join(target, CONTROL)
+    process = foreach_batch_upsert(
+        spark, target, ["k"], rules={"neg": F.col("v") < 0}
+    )
+    paths = []
+    for b in range(3):
+        # overlapping keys (updates and inserts), two rejects a batch
+        rows = [
+            (k, -1.0 if k % 10 == 0 else float(k))
+            for k in range(b * 10, b * 10 + 20)
+        ]
+        path = str(tmp_path / f"landing{b}")
+        spark.createDataFrame(rows, "k long, v double").coalesce(
+            1
+        ).write.parquet(path)
+        paths.append(path)
+
+    def ledger_files() -> int:
+        return sum(f.endswith(".parquet") for f in os.listdir(ctrl_dir))
+
+    jobs, files = [], []
+    for b, path in enumerate(paths):
+        batch = spark.read.parquet(path)  # schema inference not counted
+        tag = f"sink-budget-{b}"
+        sc.addJobTag(tag)
+        try:
+            process(batch, b)
+        finally:
+            sc.removeJobTag(tag)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.append(len(sc._jsc.sc().statusTracker().getJobIdsForTag(tag)))
+        files.append(ledger_files())
+    assert all(0 < n <= _SINK_JOBS_PER_BATCH for n in jobs[1:]), jobs
+    assert files == [1, 2, 3]
+    assert spark.read.parquet(os.path.join(target, "_rejects")).count() == 6
+
+
+@pytest.mark.parametrize("shape", ["plain", "cdc_delete_all", "partitioned"])
+def test_sink_filas_matches_rows_read_back(spark, tmp_path, shape):
+    """The ledger's ``filas`` is the row count of what the batch wrote:
+    the whole target for the plain sink (0 after a CDC batch deletes
+    every key), the rewritten slice for the partitioned sink."""
+    target = str(tmp_path / "t")
+    data = os.path.join(target, "data")
+    schema = "k long, day string, v string, op string, seq long"
+    batches = [
+        [(1, "d1", "a", "U", 1), (2, "d1", "b", "U", 1)]
+        + [(3, "d2", "c", "U", 1)],
+        [(2, "d1", "b2", "U", 2), (4, "d3", "d", "U", 2)],
+    ]
+    if shape == "plain":
+        process = foreach_batch_upsert(spark, target, ["k"])
+    elif shape == "partitioned":
+        process = foreach_batch_upsert_partitioned(
+            spark, target, ["k"], "day"
+        )
+    else:
+        process = foreach_batch_upsert(
+            spark, target, ["k"], op_col="op", cdc_order=[F.desc("seq")]
+        )
+        batches.append([(k, None, None, "D", 3) for k in (1, 2, 3, 4)])
+    for b, rows in enumerate(batches):
+        process(spark.createDataFrame(rows, schema), b)
+        filas = (
+            read_control(spark, target)
+            .filter(F.col("batch_id") == b)
+            .first()["filas"]
+        )
+        written = spark.read.option("basePath", data).parquet(data)
+        if shape == "partitioned":
+            touched = {r[1] for r in rows}
+            written = written.filter(F.col("day").isin(touched))
+        assert filas == written.count(), (shape, b)
+    if shape == "cdc_delete_all":
+        assert filas == 0
+
+
 def test_dedupe_stream_exact_above_2_53_with_nulls(spark, tmp_path):
     """Ids above 2^53 are not float64-representable; a NULL sharing an
     Arrow chunk with them used to lift the id column to float64 and
